@@ -836,9 +836,10 @@ def dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     15dp per-contribution rounding before the hash aggregate) makes
     the whole float trajectory engine-identical, so the oracle — the
     SAME recurrence unrolled as chained CTEs — must reproduce every
-    score bit-for-bit. Per iteration: one edge-join shuffle + one hash
-    aggregate over skinny (node, score) state, lineage cut with
-    localCheckpoint.
+    score bit-for-bit. Per iteration: the skinny (node, score) state is
+    broadcast into the persisted, v-partitioned edge frame and summed
+    by a hash aggregate on that layout (no shuffle), lineage cut with
+    localCheckpoint — two Spark jobs per round.
 
     Since round 10 the per-node sum runs over SCALED LONGS
     (``exact_longs=True``, both engines): integer addition is

@@ -319,6 +319,12 @@ def scoring_990_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     hinted = _990_SOURCE_SQL.replace(
         "SELECT f.*,", f"SELECT /*+ REPARTITION({n}, ein) */ f.*,", 1
     )
+    if hinted == _990_SOURCE_SQL:
+        # a reformatted source SQL would silently drop the hint
+        raise RuntimeError(
+            "scoring_990_model: REPARTITION hint anchor 'SELECT f.*,' "
+            "not found in _990_SOURCE_SQL"
+        )
     src = spark.sql(hinted)
     return apply_spec(src, _spec_990())  # unsorted: order-insensitive gate
 

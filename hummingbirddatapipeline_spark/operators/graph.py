@@ -304,10 +304,17 @@ def pagerank(
     whole trajectory is bit-reproducible in ANSI SQL (the oracle
     unrolls the same iterations as chained CTEs).
 
-    Scale shape: per iteration ONE edge-join shuffle + one hash
-    aggregate over skinny (node, score) state, lineage cut with
-    localCheckpoint — the same pattern as ``connected_components``;
-    total cost is n_iter bounded rounds regardless of graph diameter.
+    Scale shape: the loop-invariant ``edges ⋈ degree`` frame is built
+    once, hash-partitioned by the transpose key ``v`` and persisted.
+    Round 1 aggregates it directly against the uniform start vector
+    (a literal, no join). Every later round broadcasts the previous
+    round's skinny (node, score) state into that frame and runs
+    ``groupBy(v)`` on the cached layout with no exchange: one broadcast
+    job plus one result job per round, lineage cut with
+    localCheckpoint. Total cost is n_iter bounded rounds regardless of
+    graph diameter. The broadcast is taken when the state fits the
+    session's ``spark.sql.autoBroadcastJoinThreshold``; above it the
+    round falls back to a shuffle join.
 
     Returns (node, pagerank). Nodes appearing ONLY in self edges are
     dangling after symmetrization (out-degree 0, in-degree 0): they
@@ -315,34 +322,32 @@ def pagerank(
     the mass they never redistribute LEAKS — with such nodes present
     the total score sums to < 1 (by roughly d * n_dangling/n), the
     standard dangling-mass behavior when no redistribution term is
-    applied. On a graph with no self-loop-only nodes, scores sum to ~1
-    (quantization dust aside).
+    applied. They never enter the loop: one left join against the node
+    roster adds them after the last round (``n_iter=0`` returns the
+    start vector for every node). On a graph with no self-loop-only
+    nodes, scores sum to ~1 (quantization dust aside).
     """
+    from pyspark.sql.window import Window
+
+    spark = pairs.sparkSession
+    # lazy cut: the first action below (the roster checkpoint)
+    # materializes it, so both union branches of the roster and of the
+    # edge list read the upstream pair plan once
     base = pairs.select(
         F.col(id_a).alias("u"), F.col(id_b).alias("v")
-    ).localCheckpoint()
-    edges = (
-        base.union(base.select(F.col("v"), F.col("u")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    ).localCheckpoint(eager=False)
     nodes = (
         base.select(F.col("u").alias("node"))
         .union(base.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
     n = nodes.count()
-    deg = edges.groupBy("u").agg(F.count("*").alias("__d"))
-    # self-loop-only nodes have no symmetrized edges: out-degree 0 on
-    # a graph where they also receive nothing — they hold the uniform
-    # teleport score and emit nothing, handled by the left join below.
     # F.round (HALF_UP), not Python round (HALF_EVEN): the oracle's
     # SQL ROUND must produce the identical starting vector
-    scores = nodes.select(
-        "node", F.round(F.lit(1.0 / n), round_dp).alias("score")
-    ).localCheckpoint()
+    start = F.round(F.lit(1.0 / n), round_dp)
+    if n_iter < 1:
+        return nodes.select("node", start.alias("pagerank"))
     teleport = (1.0 - damping) / n
     # exact_longs closes the residual FP tie-window documented on the
     # dedup_pagerank catalog row: each (round_dp+3)dp-rounded
@@ -355,65 +360,75 @@ def pagerank(
     # node sum to at most the total outgoing mass (<= 1), so the
     # scaled sum stays <= ~1e15 plus rounding dust, far under 2^63.
     scale = float(10 ** (round_dp + 3))
-    # edges ⋈ deg is LOOP-INVARIANT: hoist it out of the iteration and
-    # truncate, so each of the n_iter rounds pays one broadcast join
-    # (the evolving scores) + the transpose aggregate instead of
-    # re-deriving the degree attach every time (guide §1.2: remove
-    # passes before tuning anything else).
-    #
-    # r16 (guide §2.4 "two operations keyed the same way can share one
-    # exchange"): hash-partition the hoisted frame by the TRANSPOSE key
-    # v and keep it as a releasable persist() instead of a
-    # localCheckpoint — InMemoryRelation preserves outputPartitioning
-    # where a checkpoint's Scan ExistingRDD does not, so every round's
-    # groupBy(v) aggregate reuses the cached layout and the per-round
-    # |edges|-row contribution shuffle disappears from all n_iter
-    # rounds (1 exchange paid once vs n_iter times). Results are
-    # partitioning-independent (the catalog row runs exact_longs=True;
-    # the plain regime's per-contribution rounding is unchanged).
+    width = spark.sparkContext.defaultParallelism
+    # edges ⋈ deg is LOOP-INVARIANT: hoist it out of the iteration.
+    # Partitioned by u, the distinct and the per-u degree window share
+    # one exchange; the frame is then hash-partitioned by the TRANSPOSE
+    # key v and kept as a persist() — InMemoryRelation keeps that
+    # outputPartitioning, and a broadcast join keeps its streamed
+    # side's, so every round's groupBy(v) aggregate runs on the cached
+    # layout and the |edges|-row contribution shuffle is paid once, not
+    # n_iter times (guide §2.4). Results are partitioning-independent
+    # under exact_longs; the plain regime's per-contribution rounding
+    # is unchanged.
     edeg = (
-        edges.join(deg, "u")
-        .repartition(
-            edges.sparkSession.sparkContext.defaultParallelism, "v"
-        )
+        base.union(base.select(F.col("v"), F.col("u")))
+        .filter(F.col("u") != F.col("v"))
+        .repartition(width, "u")
+        .distinct()
+        .withColumn("__d", F.count("*").over(Window.partitionBy("u")))
+        .repartition(width, "v")
         .persist()
     )
+    # broadcast the (node, score) state when its estimated size (row
+    # header + node id + score per node) fits the session's broadcast
+    # threshold; a negative threshold (disabled) never fits
+    limit = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    )
+    small = n * (16 + nodes._jdf.schema().defaultSize()) <= limit
+    # the state is keyed u, the next round's join key
+    scores = None
     for _ in range(n_iter):
-        contrib_col = F.round(F.col("score") / F.col("__d"), round_dp + 3)
+        score = start if scores is None else F.col("score")
+        contrib_col = F.round(score / F.col("__d"), round_dp + 3)
         if exact_longs:
             summed = (
                 F.sum(F.round(contrib_col * scale).cast("long")) / scale
             )
         else:
             summed = F.sum(contrib_col)
-        contrib = (
-            edeg.join(
-                scores.select(F.col("node").alias("u"), "score"), "u"
-            )
-            .groupBy(F.col("v").alias("node"))
-            .agg(summed.alias("__in"))
-        )
+        if scores is None:
+            src = edeg
+        else:
+            src = edeg.join(F.broadcast(scores) if small else scores, "u")
+        # every node left in the loop sits on a real edge, so it
+        # receives at least one contribution: the sum is never null
         scores = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
+            src.groupBy(F.col("v").alias("u"))
+            .agg(
                 F.round(
-                    F.lit(teleport)
-                    + F.lit(damping) * F.coalesce("__in", F.lit(0.0)),
-                    round_dp,
-                ).alias("score"),
+                    F.lit(teleport) + F.lit(damping) * summed, round_dp
+                ).alias("score")
             )
-            # per-round truncation; a batched every-3rd-round cadence
-            # was MEASURED cold at sf0.1 and is not faster (20.6 s vs
-            # 19.6 s — fusing 3 lazy rounds into one job just shifts
-            # cost into optimizing the 3-deep join plan), so keep the
-            # simple shape that matches CC's
+            # the round's result job: an eager cut, so the plan never
+            # deepens and the next round broadcasts this checkpoint
             .localCheckpoint()
         )
     # every round materialized eagerly above, so the cached edge frame
     # is no longer referenced — release the executor memory it pinned
     edeg.unpersist()
-    return scores.select("node", F.col("score").alias("pagerank"))
+    # self-loop-only nodes receive nothing in any round, so the
+    # recurrence leaves them at the bare teleport score
+    final = scores.withColumnRenamed("u", "node")
+    return nodes.join(
+        F.broadcast(final) if small else final, "node", "left"
+    ).select(
+        "node",
+        F.coalesce(
+            F.col("score"), F.round(F.lit(teleport), round_dp)
+        ).alias("pagerank"),
+    )
 
 
 def incremental_connected_components(

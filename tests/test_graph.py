@@ -207,6 +207,58 @@ def test_pagerank_star_graph_ranks_center_highest(spark):
     assert abs(sum(scores.values()) - 1.0) < 1e-9
 
 
+def _pr(spark, edges, **kw):
+    from hummingbirddatapipeline_spark.operators.graph import pagerank
+
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    return {r["node"]: r["pagerank"] for r in pagerank(df, **kw).collect()}
+
+
+def test_pagerank_self_loop_only_node_holds_teleport_and_leaks(spark):
+    """A node seen only in a self edge has no symmetrized edge: it
+    receives nothing and emits nothing, so from round 1 on it holds
+    the bare teleport score round((1-d)/n, dp), and the mass it never
+    redistributes leaks (the total stays below 1)."""
+    edges = [(0, 1), (1, 2), (5, 5)]
+    for n_iter in (1, 3):
+        scores = _pr(spark, edges, n_iter=n_iter)
+        assert set(scores) == {0, 1, 2, 5}
+        # (1 - 0.85) / 4 nodes, at 12dp
+        assert scores[5] == 0.0375
+        assert sum(scores.values()) < 0.95
+    # the path's ends mirror each other; the middle ranks highest
+    assert scores[0] == scores[2] < scores[1]
+
+
+def test_pagerank_zero_iterations_is_uniform_start(spark):
+    """``n_iter=0`` returns the start vector round(1/n, dp) for every
+    node, self-loop-only ones included."""
+    scores = _pr(spark, [(0, 1), (1, 2), (5, 5)], n_iter=0)
+    assert scores == {0: 0.25, 1: 0.25, 2: 0.25, 5: 0.25}
+    scores = _pr(spark, [(0, 1), (1, 2)], n_iter=0, round_dp=4)
+    assert scores == {0: 0.3333, 1: 0.3333, 2: 0.3333}
+
+
+def test_pagerank_star_graph_pinned_scores(spark):
+    """The star + isolated pair under both summation regimes, against
+    literal scores: any change to the round structure must reproduce
+    the trajectory bit for bit — with the score state broadcast, and
+    with broadcasts disabled (the shuffle-join rounds)."""
+    edges = [(0, i) for i in range(1, 7)] + [(10, 11)]
+    expected = {0: 0.316113140034, 10: 0.111111111111, 11: 0.111111111111}
+    expected.update({i: 0.076944106291 for i in range(1, 7)})
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(key)
+    try:
+        for threshold in (saved, "-1"):
+            spark.conf.set(key, threshold)
+            for exact_longs in (False, True):
+                got = _pr(spark, edges, exact_longs=exact_longs)
+                assert got == expected, (threshold, exact_longs)
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_precomputed_labels_params_equal_inline_closure(spark, sf_dir):
     """r15 optimization: the shared CC fixture and the operators'
     ``labels`` parameters must be result-identical to the inline

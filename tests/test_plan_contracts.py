@@ -1003,3 +1003,76 @@ def test_salted_join_exchanges_on_salted_key(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "__salt" in plan
+
+
+def test_pagerank_round_broadcasts_state_into_cached_layout(
+    spark, monkeypatch
+):
+    """Every PageRank round after the first broadcasts the (node,
+    score) state into the persisted, v-partitioned edge frame and
+    aggregates by v on that layout: one BroadcastHashJoin and no
+    hash exchange between the cached scan and the aggregate."""
+    from hummingbirddatapipeline_spark.operators.graph import pagerank
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(20)] + [(0, 5), (30, 30)],
+        "id_a long, id_b long",
+    )
+    plans = []
+    checkpoint = type(pairs).localCheckpoint
+
+    def recording(df, *args, **kwargs):
+        plans.append(_physical(df))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(pairs), "localCheckpoint", recording)
+    pagerank(pairs, n_iter=3)
+    rounds = [p for p in plans if "InMemoryTableScan" in p]
+    assert len(rounds) == 3
+    # round 1 aggregates against the literal start vector: no join
+    assert "Join" not in rounds[0]
+    for plan in rounds[1:]:
+        assert plan.count("BroadcastHashJoin") == 1
+        above_cache = plan[: plan.index("InMemoryTableScan")]
+        assert "HashAggregate" in above_cache
+        assert "Exchange hashpartitioning" not in above_cache
+
+
+def test_pagerank_job_count_is_two_per_round(spark):
+    """Building a PageRank is a fixed set-up plus two Spark jobs per
+    round (the state broadcast and the round's checkpoint)."""
+    from hummingbirddatapipeline_spark.operators.graph import pagerank
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(0, i) for i in range(1, 7)] + [(10, 11), (20, 20)],
+        "id_a long, id_b long",
+    )
+    for n_iter in (1, 10):
+        group = f"pagerank-jobs-{n_iter}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(pairs, n_iter=n_iter, exact_longs=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 2 * n_iter + 6, (n_iter, len(jobs))
+
+
+def test_990_repartition_hint_fails_loudly_when_anchor_missing(
+    spark, sf_dir, monkeypatch
+):
+    """The 990 row injects its REPARTITION hint by string substitution;
+    a reformatted source SQL must raise rather than silently build the
+    unhinted plan."""
+    import pytest
+
+    from hummingbirddatapipeline_spark.catalog import scoring_q
+
+    sql = scoring_q._990_SOURCE_SQL
+    reformatted = sql.replace("SELECT f.*,", "SELECT f.* ,")
+    assert reformatted != sql
+    monkeypatch.setattr(scoring_q, "_990_SOURCE_SQL", reformatted)
+    with pytest.raises(RuntimeError, match="REPARTITION"):
+        # past the plan cache: build the row itself
+        scoring_q.scoring_990_model.__wrapped__(spark, sf_dir)
